@@ -3,10 +3,10 @@ reference's ``blas32`` backend (/root/reference/node/backend/blas32.go:41-43),
 selected like ``backend.Select`` (node/backend/backend.go:26-36).
 
 Arrow-batched pandas UDFs: each batch arrives as a pandas Series of
-ndarrays, is stacked into one (batch, dim) matrix, and the kernel is one
-BLAS call. This is the wide-vector fast path; for dims up to a few
-hundred, the pure-Catalyst expressions in ``vector.py`` win because they
-never leave the JVM.
+ndarrays, its rows are stacked into one (rows, dim) matrix per vector
+length, and the kernel is one BLAS call per matrix. This is the
+wide-vector fast path; for dims up to a few hundred, the pure-Catalyst
+expressions in ``vector.py`` win because they never leave the JVM.
 
 Unlike the reference — whose backend serializes every call behind a global
 mutex (node/backend/backend.go:8,67-71) — both backends here parallelize
@@ -38,32 +38,46 @@ def current_backend() -> str:
     return _BACKEND
 
 
-def _stack(s: pd.Series) -> np.ndarray:
-    return np.stack(s.to_numpy())
+def _rowwise(kernel, *cols: pd.Series) -> pd.Series:
+    """Apply ``kernel`` (stacked (rows, dim) float64 matrices in, one value
+    per row out) to each group of rows whose vectors share one length. An
+    Arrow batch holds whatever rows the partitioning put together, so
+    lengths can differ inside one batch and a single np.stack would raise.
+    Rows with a null vector or operands of different lengths come out
+    null, as in the Catalyst kernels."""
+    groups: dict[int, list[int]] = {}
+    for i, vs in enumerate(zip(*cols)):
+        if all(v is not None and len(v) == len(vs[0]) for v in vs):
+            groups.setdefault(len(vs[0]), []).append(i)
+    out = np.full(len(cols[0]), np.nan)  # NaN -> null on the way back to Arrow
+    for idx in groups.values():
+        out[idx] = kernel(*(np.stack(c.to_numpy()[idx]).astype(np.float64) for c in cols))
+    return pd.Series(out)
+
+
+def _cosine(ma: np.ndarray, mb: np.ndarray) -> np.ndarray:
+    dots = np.einsum("ij,ij->i", ma, mb)
+    den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
+    return np.where(den == 0.0, 0.0, dots / np.where(den == 0.0, 1.0, den))
 
 
 @F.pandas_udf(DoubleType())
 def dot_np(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched dot product: one matmul-style einsum per Arrow batch."""
-    ma, mb = _stack(a).astype(np.float64), _stack(b).astype(np.float64)
-    return pd.Series(np.einsum("ij,ij->i", ma, mb))
+    """Batched dot product: one einsum per same-length group of an Arrow
+    batch."""
+    return _rowwise(lambda ma, mb: np.einsum("ij,ij->i", ma, mb), a, b)
 
 
 @F.pandas_udf(DoubleType())
 def magnitude_np(a: pd.Series) -> pd.Series:
-    ma = _stack(a).astype(np.float64)
-    return pd.Series(np.linalg.norm(ma, axis=1))
+    return _rowwise(lambda ma: np.linalg.norm(ma, axis=1), a)
 
 
 @F.pandas_udf(DoubleType())
 def cosine_np(a: pd.Series, b: pd.Series) -> pd.Series:
     """Cosine with the reference's zero-magnitude -> 0.0 rule
     (node/wrapper/record.go:98-102)."""
-    ma, mb = _stack(a).astype(np.float64), _stack(b).astype(np.float64)
-    dots = np.einsum("ij,ij->i", ma, mb)
-    den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-    out = np.where(den == 0.0, 0.0, dots / np.where(den == 0.0, 1.0, den))
-    return pd.Series(out)
+    return _rowwise(_cosine, a, b)
 
 
 def dot_auto(a: Column | str, b: Column | str) -> Column:

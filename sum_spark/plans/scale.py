@@ -22,11 +22,19 @@ from pyspark.sql import functions as F
 
 
 def _unpersist_quietly(dfs: tuple[DataFrame, ...]) -> None:
+    """Release each frame's cache entry and, for a localCheckpoint frame,
+    its checkpointed RDD: that RDD is no CacheManager entry (the frame's
+    plan is a LogicalRDD over it), so ``df.unpersist()`` leaves it in
+    getPersistentRDDs."""
     for d in dfs:
         try:
             d.unpersist()
         except Exception:
             pass  # session already stopped — nothing to release
+        try:
+            d._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        except Exception:
+            pass  # not a checkpoint frame, or the session stopped
 
 
 # Live holders for persisted intermediates, keyed by (session id,
@@ -87,7 +95,7 @@ def _release_refs(keyed: tuple) -> None:
                 for f in _CACHE_FRAMES.pop(key, []):
                     if f is not d:
                         _unpersist_quietly((f,))
-            d.unpersist()
+            _unpersist_quietly((d,))
         except Exception:
             pass  # session already stopped — nothing to release
 
@@ -228,7 +236,9 @@ def range_partitioned_lead(
 
     ``order_col`` must be unique (it is the total order). Adds one
     ``__lead_<c>`` column per requested value column; the final row's
-    leads are NULL, as with LEAD.
+    leads are NULL, as with LEAD. The materialized pass-1 RDD is freed
+    when the returned frame is dropped (``release_with``): a caller that
+    derives from it must ``carry_caches`` the returned frame.
     """
     from pyspark.sql import Window as W
 
@@ -277,7 +287,7 @@ def range_partitioned_lead(
                     F.col("__rev_rn") == 1, F.col(f"__next_{c}")
                 ).otherwise(F.col(f"__lead_{c}")),
             ).drop(f"__next_{c}")
-    return led.drop("__pid", "__rev_rn")
+    return release_with(led.drop("__pid", "__rev_rn"), rp)
 
 
 def spread_for_compute(df: DataFrame, partitioning_col: str | None = None) -> DataFrame:

@@ -103,7 +103,7 @@ _PAIRS_CTE = """
 )
 def q24(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sum_spark.functions.vector import cosine_sub, dot_range, jaccard_range
-    from sum_spark.plans.scale import range_partitioned_lead
+    from sum_spark.plans.scale import carry_caches, range_partitioned_lead
 
     emb = load_table(spark, sf_dir, "embeddings")
     binarize = lambda c: F.transform(  # noqa: E731
@@ -117,7 +117,7 @@ def q24(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("e1"),
         F.col("__lead_embedding").alias("e2"),
     )
-    return pairs.select(
+    out = pairs.select(
         "vec_id",
         F.round(dot("e1", "e2"), 4).alias("dp"),
         F.round(magnitude("e1"), 4).alias("mag_a"),
@@ -131,6 +131,7 @@ def q24(spark: SparkSession, sf_dir: str) -> DataFrame:
         vec_equal("e1", "e2").alias("eq"),
         F.round(vec_get("e1", 8).cast("double"), 4).alias("g8"),
     ).orderBy("vec_id")
+    return carry_caches(out, led)
 
 
 @query(

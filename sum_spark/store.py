@@ -23,22 +23,25 @@ a weight ``w``: creates append w=+1; ``delete`` appends the stored row
 again with w=-1 (bit-identical — floats/longs/strings round-trip the
 point read exactly, so the negation cancels in the netting group);
 ``update`` appends the old row with w=-1 plus the new row with w=+1.
-Mutations are therefore O(rows touched) APPENDS — no bucket rewrite,
-no read-modify-write race window, and a changed row nets to exactly
-its new version. The live view (``_live``) nets w per full row content
-and keeps positive sums; point reads still prune to the id's bucket
-directory because the partition column is a grouping key (the filter
-pushes below the aggregate — the pq_index_rows plan shape). A
-``_tombstones`` marker file, written by the first mutation and removed
-by ``compact``, lets a never-mutated table skip the netting aggregate
-entirely (ADVICE r6 #4). ``compact()`` folds the accumulated partials
-back into one file per bucket via the crash-safe bucket swap. The
-reference instead rewrites one protobuf file per record under a global
-lock (node/storage/saver.go:12-20) — per-record files at 100 TB are
-the small-files pathology; append-only partials + periodic compaction
-bound file count AND rewrite amplification. A transactional table
-format (Delta/Iceberg, gated by sources.formats.delta_available) would
-add MERGE/ACID on top of the same layout.
+Mutations are therefore O(rows touched) APPENDS, and the rows are
+already on the driver, so ``_append`` writes them with Arrow — one
+parquet file per touched bucket, staged under a dot-name Spark's
+listing skips and renamed into view — and runs no Spark job. A changed
+row nets to exactly its new version. The live view (``_live``) nets w
+per full row content and keeps positive sums; point reads still prune
+to the id's bucket directory because the partition column is a
+grouping key (the filter pushes below the aggregate — the pq_index_rows
+plan shape). A ``_tombstones`` marker file, written by the first
+mutation and removed by ``compact``, lets a never-mutated table skip
+the netting aggregate entirely (ADVICE r6 #4). ``compact()`` folds the
+buckets that hold more than one file back into one file each, in one
+Spark job, and swaps them in dir for dir. The reference instead
+rewrites one protobuf file per record under a global lock
+(node/storage/saver.go:12-20) — per-record files at 100 TB are the
+small-files pathology; append-only partials + periodic compaction bound
+file count AND rewrite amplification. A transactional table format
+(Delta/Iceberg, gated by sources.formats.delta_available) would add
+MERGE/ACID on top of the same layout.
 """
 
 from __future__ import annotations
@@ -47,6 +50,8 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -77,6 +82,17 @@ _WRITE_SCHEMA = StructType([*RECORD_SCHEMA.fields, StructField("w", IntegerType(
 # before the merge-on-read layout (or adopted flat files) lack ``w`` and
 # read as null -> coalesced to +1.
 _READ_SCHEMA = StructType([*_WRITE_SCHEMA.fields, StructField("b", IntegerType(), True)])
+
+# _WRITE_SCHEMA as Arrow, for the driver-side appends.
+_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("id", pa.int64(), nullable=False),
+        pa.field("data", pa.list_(pa.float32())),
+        pa.field("shape", pa.list_(pa.int64())),
+        pa.field("meta", pa.map_(pa.string(), pa.string())),
+        pa.field("w", pa.int32()),
+    ]
+)
 
 NUM_BUCKETS = 16
 
@@ -155,33 +171,28 @@ class RecordStore:
         except Exception:
             return self.spark.createDataFrame([], _READ_SCHEMA)
 
-    def _append_weighted(self, rows: list[tuple[Row, int]]) -> None:
-        """Append rows with PER-ROW weights in one write job, coalesced
-        to ONE task so all partials land in one file per partition dir —
-        the narrowest crash window update() can get (ADVICE r7: a 2-row
-        createDataFrame can otherwise split across tasks/files, and a
-        parquet append's job commit is not atomic across files, so the
-        w=-1 partial could land without its +1 replacement). With one
-        task the -1/+1 pair for an UNCHANGED id shares a file; a crash
-        mid-write leaves no visible file at all. Same-id-different-bucket
-        pairs still split by partitionBy — that residual window is
-        documented at update()."""
-        data = [
-            Row(id=r["id"], data=r["data"], shape=r["shape"], meta=r["meta"], w=int(w))
-            for r, w in rows
-        ]
-        df = self.spark.createDataFrame(data, _WRITE_SCHEMA).coalesce(1).withColumn(
-            "b", (F.col("id") % self.num_buckets).cast("int")
-        )
-        df.write.mode("append").partitionBy("b").parquet(self.path)
-
-    def _append(self, rows: list[Row], w: int = 1) -> None:
-        df = (
-            self.spark.createDataFrame(rows, RECORD_SCHEMA)
-            .withColumn("w", F.lit(int(w)))
-            .withColumn("b", (F.col("id") % self.num_buckets).cast("int"))
-        )
-        df.write.mode("append").partitionBy("b").parquet(self.path)
+    def _append(self, rows: list[tuple[Row, int]]) -> None:
+        """Persist ``(row, w)`` pairs the driver already holds, without a
+        Spark job: one Arrow-written parquet file per touched bucket,
+        written as ``.part-<uuid>.parquet`` and renamed to
+        ``part-<uuid>.parquet``. Spark's file listing skips names that
+        start with '.', so a bucket's share of the batch becomes visible
+        whole or not at all — an update's -1/+1 pair shares its id's
+        bucket and therefore one file."""
+        by_bucket: dict[int, list[tuple[Row, int]]] = {}
+        for r, w in rows:
+            by_bucket.setdefault(self._bucket(r["id"]), []).append((r, w))
+        for bucket, part in by_bucket.items():
+            cols = {f: [r[f] for r, _ in part] for f in RECORD_SCHEMA.fieldNames()}
+            cols["w"] = [w for _, w in part]
+            d = self._bucket_dir(bucket)
+            os.makedirs(d, exist_ok=True)
+            name = f"part-{uuid.uuid4().hex}.parquet"
+            staged = os.path.join(d, "." + name)
+            # No dictionary encoding: on float vectors it only grows the
+            # file (+47% on random data), and every later scan reads it.
+            pq.write_table(pa.table(cols, schema=_ARROW_SCHEMA), staged, use_dictionary=False)
+            os.rename(staged, os.path.join(d, name))
 
     # -- merge-on-read netting ------------------------------------------------
 
@@ -227,26 +238,6 @@ class RecordStore:
             )
         )
 
-    def _rewrite_bucket(self, bucket: int, df: DataFrame) -> None:
-        """Swap ONE bucket directory for its new contents — the O(delta)
-        mutation: 1/num_buckets of the table is rewritten (and compacted
-        to a single file), every other bucket's files are untouched.
-        ``df`` must contain only rows of this bucket, without ``b``."""
-        target = self._bucket_dir(bucket)
-        tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = target + f".old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(target):
-            os.rename(target, old)
-        os.rename(tmp, target)
-        shutil.rmtree(old, ignore_errors=True)
-        # the staged write leaves a _SUCCESS marker; harmless, keep it
-
-    def _bucket_rows(self, bucket: int) -> DataFrame:
-        """One bucket's LIVE rows (directory-pruned, netted), partition
-        col dropped."""
-        return self._live().where(F.col("b") == bucket).drop("b")
-
     @staticmethod
     def _normalize(data, shape, meta) -> tuple[list, list, dict]:
         data = [float(x) for x in (data or [])]
@@ -266,7 +257,7 @@ class RecordStore:
         rid = self._next_id
         self._next_id += 1
         d, s, m = self._normalize(data, shape, meta)
-        self._append([Row(id=rid, data=d, shape=s, meta=m)])
+        self._append([(Row(id=rid, data=d, shape=s, meta=m), 1)])
         self._maybe_auto_compact()
         return rid
 
@@ -274,15 +265,16 @@ class RecordStore:
         if self._exists(rid):
             raise IdCollision(f"record {rid} exists")
         d, s, m = self._normalize(data, shape, meta)
-        self._append([Row(id=int(rid), data=d, shape=s, meta=m)])
+        self._append([(Row(id=int(rid), data=d, shape=s, meta=m), 1)])
         self._next_id = max(self._next_id, int(rid) + 1)
         self._maybe_auto_compact()
 
     def create_many_with_id(self, records: dict[int, list]) -> None:
         """Bulk create; all-or-nothing like CreateRecordsWithId
         (node/storage/index.go:188-218): collisions are checked for the
-        whole batch before any write. One write job for the whole batch —
-        creates batch naturally instead of one file per record."""
+        whole batch before any write. The write is one driver-side file
+        per touched bucket — creates batch naturally instead of one file
+        per record."""
         ids = [int(i) for i in records]
         hits = (
             self._live()
@@ -296,7 +288,7 @@ class RecordStore:
         rows = []
         for rid, data in records.items():
             d, s, m = self._normalize(data, None, None)
-            rows.append(Row(id=int(rid), data=d, shape=s, meta=m))
+            rows.append((Row(id=int(rid), data=d, shape=s, meta=m), 1))
         self._append(rows)
         self._next_id = max(self._next_id, max(ids) + 1)
         self._maybe_auto_compact()
@@ -324,20 +316,6 @@ class RecordStore:
             raise RecordNotFound(rid)
         return rows[0]
 
-    @staticmethod
-    def _as_record_row(row: Row) -> Row:
-        """A live row re-materialized for a tombstone append. The values
-        round-trip exactly (float32 -> Python float -> float32 is
-        lossless for values that came FROM float32; longs and strings
-        trivially), so the w=-1 copy lands in the same netting group as
-        the stored +1 partial and cancels it."""
-        return Row(
-            id=int(row["id"]),
-            data=list(row["data"]) if row["data"] is not None else None,
-            shape=list(row["shape"]) if row["shape"] is not None else None,
-            meta=dict(row["meta"]) if row["meta"] is not None else None,
-        )
-
     def update(self, rid: int, data=None, meta=None, shape=None) -> None:
         """Overwrite data/meta/shape by id (record_driver.go:32-45).
         O(delta) APPEND: the old version goes back in with w=-1 (netting
@@ -351,30 +329,25 @@ class RecordStore:
         )
         # marker FIRST (a crash after the -1 row but before the marker
         # would let the pass-through path serve the tombstone as live),
-        # then BOTH partials in ONE single-task write job: a crash
-        # between two separate appends would negate the old version with
-        # no replacement — a silent delete where the caller asked for an
-        # update. One coalesced task NARROWS that window (same bucket =
-        # same file = one visible-or-not unit) but does not close it:
-        # update() keys by id, so both versions share a bucket and the
-        # window is gone in practice; if the id ever re-bucketed, the
-        # pair would span two files whose commits are not atomic.
+        # then BOTH partials in ONE append: update() keys by id, so the
+        # -1/+1 pair lands in one bucket and one atomically renamed file —
+        # a crash leaves either the old version or the new one, never the
+        # negation alone (a silent delete where the caller asked for an
+        # update).
         self._mark_tombstones()
-        self._append_weighted(
-            [
-                (self._as_record_row(old), -1),
-                (Row(id=int(rid), data=d, shape=s, meta=m), 1),
-            ]
-        )
+        self._append([(old, -1), (Row(id=int(rid), data=d, shape=s, meta=m), 1)])
         self._maybe_auto_compact()
 
     def delete(self, rid: int) -> None:
         """Deletion as negation: append the stored row again with w=-1
         (read() both enforces the not-found contract, records.go:117-121,
-        and fetches the exact live version to negate)."""
+        and fetches the exact live version to negate). The values
+        round-trip exactly — float32 -> Python float -> float32 is
+        lossless, longs and strings trivially — so the w=-1 copy lands in
+        the same netting group as the stored +1 row and cancels it."""
         old = self.read(rid)
         self._mark_tombstones()  # marker first — see update()
-        self._append([self._as_record_row(old)], w=-1)
+        self._append([(old, -1)])
         self._maybe_auto_compact()
 
     def delete_many(self, rids: list[int]) -> None:
@@ -397,14 +370,21 @@ class RecordStore:
         )
         self._maybe_auto_compact()
 
-    def _parquet_file_count(self) -> int:
-        n = 0
+    def _bucket_files(self) -> dict[int, list[str]]:
+        """Each bucket's VISIBLE parquet files. Spark's listing skips
+        names starting with '.' or '_' (staged appends, compaction
+        scratch), so they are skipped here too."""
+        out = {}
         for entry in os.listdir(self.path):
-            if not entry.startswith("b="):
-                continue
-            d = os.path.join(self.path, entry)
-            n += sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-        return n
+            if entry.startswith("b=") and entry[2:].isdigit():
+                d = os.path.join(self.path, entry)
+                out[int(entry[2:])] = [
+                    f for f in os.listdir(d) if f.endswith(".parquet") and f[0] not in "._"
+                ]
+        return out
+
+    def _parquet_file_count(self) -> int:
+        return sum(len(fs) for fs in self._bucket_files().values())
 
     def _maybe_auto_compact(self) -> None:
         """Fire :meth:`compact` when accumulated partial files exceed
@@ -417,16 +397,33 @@ class RecordStore:
             self.compact()
 
     def compact(self) -> None:
-        """Fold each bucket's accumulated partials (create-appends and
-        tombstones) into one netted file per bucket — the offline
-        maintenance job that bounds file count and removes the per-read
-        netting work (the tombstone marker comes off afterwards, so reads
-        return to the pass-through path). Crash-safe per bucket via the
-        staged tmp/rename swap."""
-        for entry in sorted(os.listdir(self.path)):
-            if entry.startswith("b="):
-                bucket = int(entry.split("=", 1)[1])
-                self._rewrite_bucket(bucket, self._bucket_rows(bucket))
+        """Fold every DIRTY bucket — one holding more than one visible
+        parquet file — into one netted file, in one Spark job for all of
+        them, and clear the netting marker (reads return to the
+        pass-through path). A bucket with one file needs no fold: every
+        w=-1 row is written into a bucket that already holds its +1 row
+        (update/delete negate the row read() found in the id's bucket),
+        so a lone file holds no negation to cancel. Clean buckets keep
+        their files untouched. The fold is written to a hidden
+        ``.compact-<uuid>`` dir; each dirty bucket dir is then swapped
+        for its folded one (removed if nothing in it survived the
+        netting), and the marker comes off last."""
+        dirty = sorted(b for b, fs in self._bucket_files().items() if len(fs) > 1)
+        if dirty:
+            stage = os.path.join(self.path, f".compact-{uuid.uuid4().hex}")
+            (
+                self._live()
+                .where(F.col("b").isin(dirty))
+                .repartition(len(dirty), "b")
+                .write.partitionBy("b")
+                .parquet(stage)
+            )
+            for b in dirty:
+                target, folded = self._bucket_dir(b), os.path.join(stage, f"b={b}")
+                os.rename(target, os.path.join(stage, f"old-{b}"))
+                if os.path.isdir(folded):
+                    os.rename(folded, target)
+            shutil.rmtree(stage)
         if os.path.isfile(self._marker):
             os.remove(self._marker)
 

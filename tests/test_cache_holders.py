@@ -98,3 +98,23 @@ def test_release_refs_collision_releases_every_plan(spark, monkeypatch):
     assert not probe(5) and not probe(11)
     assert key not in scale._CACHE_HOLDERS
     assert key not in scale._CACHE_FRAMES
+
+
+def test_q24_frees_its_local_checkpoint(spark, sf_smoke):
+    """range_partitioned_lead materializes its range-partitioned input
+    with localCheckpoint, an RDD outside the DataFrame cache; q24 carries
+    it on its result, and dropping the result frees it: three calls
+    whose results are dropped leave the persisted-RDD count unchanged."""
+    import gc
+
+    from sum_spark.queries import REGISTRY
+
+    fn = REGISTRY["q24_vector_kernels"].fn
+    jsc = spark.sparkContext._jsc
+    assert fn(spark, sf_smoke).count() > 0  # warm-up
+    gc.collect()
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        assert fn(spark, sf_smoke).count() > 0
+    gc.collect()
+    assert jsc.getPersistentRDDs().size() == before

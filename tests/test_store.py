@@ -380,3 +380,89 @@ def test_keyset_pagination_equals_offset_walk(spark, tmp_path):
         .toString()
     )
     assert "PushedFilters" in plan and "GreaterThan(id,7)" in plan
+
+
+def _jobs(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs, counted under a job group
+    of its own (the listener bus is drained first, so the count is
+    exact)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"store-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_path_job_counts(spark, tmp_path):
+    """Per-op Spark jobs of the write path: a create is a driver-side
+    Arrow write (0 jobs); update and delete keep only their read() — 1
+    job on the pass-through path, 2 once the netting marker is set;
+    compact is one write job over all dirty buckets, behind the netting
+    aggregate's and the repartition's shuffle stages (3)."""
+    store = RecordStore(spark, str(tmp_path / "records"), num_buckets=4)
+    for i in range(8):
+        assert _jobs(spark, lambda i=i: store.create([float(i)], meta={"k": str(i)})) == 0
+    assert _jobs(spark, lambda: store.update(1, data=[9.0])) == 1
+    assert _jobs(spark, lambda: store.delete(5)) == 2
+    assert _jobs(spark, store.compact) == 3
+    assert {r["id"]: list(r["data"]) for r in store.df.collect()} == {
+        1: [9.0], 2: [1.0], 3: [2.0], 4: [3.0], 6: [5.0], 7: [6.0], 8: [7.0]
+    }
+
+
+def test_compact_folds_only_dirty_buckets(spark, tmp_path):
+    """compact() rewrites only the buckets holding more than one visible
+    file: with 2 of 16 dirty, the other 14 keep their files byte-identical
+    (same path, same mtime), and folding 2 dirty buckets runs as many
+    Spark jobs as folding 8."""
+    import os
+
+    def dirty_store(name: str, n_dirty: int) -> RecordStore:
+        st = RecordStore(spark, str(tmp_path / name))
+        assert st.num_buckets == 16
+        st.create_many_with_id({i: [float(i)] for i in range(1, 33)})  # one file per bucket
+        for b in range(n_dirty):
+            st.update(16 + b, data=[-float(b)])  # id 16 + b lives in bucket b
+        return st
+
+    def files(st: RecordStore, bucket: int) -> dict[str, float]:
+        d = st._bucket_dir(bucket)
+        return {f: os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)}
+
+    two = dirty_store("two", 2)
+    clean = {b: files(two, b) for b in range(2, 16)}
+    want = {r["id"]: list(r["data"]) for r in two.df.collect()}
+    jobs_two = _jobs(spark, two.compact)
+    assert {b: files(two, b) for b in range(2, 16)} == clean
+    assert all(len(fs) == 1 for fs in two._bucket_files().values())
+    assert {r["id"]: list(r["data"]) for r in two.df.collect()} == want
+    assert want[16] == [0.0] and want[17] == [-1.0]
+
+    eight = dirty_store("eight", 8)
+    assert _jobs(spark, eight.compact) == jobs_two
+    assert eight._parquet_file_count() == 16
+
+
+def test_staged_append_file_is_invisible(spark, tmp_path):
+    """An append is written under a dot-name and renamed into view; one
+    left behind by a crash between the two steps is invisible to reads,
+    to the file count that drives auto-compaction, and to compaction."""
+    import os
+    import shutil
+
+    store = RecordStore(spark, str(tmp_path / "records"), num_buckets=4)
+    store.create([1.0])
+    bucket_dir = store._bucket_dir(1)
+    (part,) = os.listdir(bucket_dir)
+    shutil.copy(os.path.join(bucket_dir, part), os.path.join(bucket_dir, ".part-left.parquet"))
+    assert store.count() == 1  # a visible copy would read as a second row
+    assert store._parquet_file_count() == 1
+    store.compact()  # one visible file: nothing to fold
+    assert sorted(os.listdir(bucket_dir)) == sorted([part, ".part-left.parquet"])
+    assert store.read(1)["data"] == [1.0]

@@ -117,6 +117,31 @@ def test_numpy_backend_parity(vec_df):
         assert r["c1"] == pytest.approx(r["c2"], abs=1e-9)
 
 
+def test_numpy_backend_mixed_lengths_in_one_batch(spark, vec_df):
+    """One Arrow batch holding vectors of several lengths — the whole
+    fixture in ONE partition, so one batch — must give the Catalyst
+    results row for row, NULL included (operands of different lengths,
+    a null vector)."""
+    extra = spark.createDataFrame([([1.0, 2.0], [1.0]), (None, [1.0])], vec_df.schema)
+    one = vec_df.union(extra).coalesce(1)
+    assert one.rdd.getNumPartitions() == 1
+    pairs = (
+        (V.dot("a", "b"), VP.dot_np("a", "b")),
+        (V.cosine("a", "b"), VP.cosine_np("a", "b")),
+        (V.magnitude("a"), VP.magnitude_np("a")),
+    )
+    cols = [c.alias(f"{k}{j}") for k, pair in enumerate(pairs) for j, c in enumerate(pair)]
+    rows = one.select(*cols).collect()
+    assert len(rows) == 8
+    for r in rows:
+        for k in range(len(pairs)):
+            want, got = r[f"{k}0"], r[f"{k}1"]
+            if want is None:
+                assert got is None
+            else:
+                assert got == pytest.approx(want, abs=1e-9)
+
+
 def test_backend_select_dispatch(vec_df):
     VP.select_backend("numpy")
     try:
